@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkdedup.config import DedupConfig
-from sparkdedup.operators.components import connected_components
+from sparkdedup.operators.components import (ComponentsNotConverged,
+                                             connected_components)
 from sparkdedup.operators.containment import (anchor_containment_candidates,
                                               verify_containment)
 from sparkdedup.operators.lsh import candidate_pairs
@@ -133,22 +134,21 @@ class DedupPipeline:
         (mdir / f"{stage}.json").write_text(json.dumps(payload, indent=2))
 
     def _checkpoint(self, df: DataFrame, stage: str,
-                    partition_by: str | None = None) -> DataFrame:
+                    extra: dict | None = None) -> DataFrame:
         """Write stage output to parquet and read back (lineage cut + resume
-        point). Without a workdir, localCheckpoint instead."""
+        point). Without a workdir, localCheckpoint instead. `extra` joins
+        the stage's metrics sidecar."""
         d = self._stage_dir(stage)
         t0 = time.time()
         if d is None:
             out = df.localCheckpoint()
             n = out.count()
         else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(partition_by)
-            writer.parquet(str(d))
+            df.write.mode("overwrite").parquet(str(d))
             out = self.spark.read.parquet(str(d))
             n = _parquet_rows(d)  # footer metadata, no second scan job
-        self._write_metrics(stage, {"rows": n, "seconds": round(time.time() - t0, 3)})
+        self._write_metrics(stage, {"rows": n, "seconds": round(time.time() - t0, 3),
+                                    **(extra or {})})
         return out
 
     def _load(self, stage: str) -> DataFrame:
@@ -283,10 +283,20 @@ class DedupPipeline:
             nodes = sigs.select("file_id")
             cluster_edges = edges.select("src", "dst")
             t_cc = time.time()
-            clusters, iters = connected_components(cluster_edges, nodes, cfg)
+            clusters, rounds = connected_components(cluster_edges, nodes, cfg)
             self.metrics["cc_seconds"] = round(time.time() - t_cc, 3)
-            clusters = self._checkpoint(clusters, "clusters")
-            self.metrics["cc_iterations"] = iters
+            self.metrics["cc_iterations"] = int(rounds)
+            if not rounds.converged:
+                # unconverged labels are not the components: never commit
+                # them as the clusters stage
+                raise ComponentsNotConverged(
+                    f"connected components did not converge within "
+                    f"max_cc_iters={cfg.max_cc_iters} rounds; the clusters "
+                    f"stage was not written")
+            clusters = self._checkpoint(clusters, "clusters", extra={
+                "cc_iterations": int(rounds),
+                "cc_converged": rounds.converged,
+                "cc_round_seconds": list(rounds.seconds)})
 
         self._sweep_persisted(persisted_before, [sigs, edges, clusters])
         self.metrics["total_seconds"] = round(time.time() - t_start, 3)

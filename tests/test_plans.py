@@ -373,3 +373,46 @@ def test_tfidf_keywords_plan(spark):
     # sees, so the window exchange moves O(3 * docs), not every term
     assert "WindowGroupLimit" in plan
     assert plan.count("WindowGroupLimit") >= 2  # Partial + Final
+
+
+def _ancestors(plan_lines, i):
+    """Lines above plan_lines[i] in the tree, nearest first."""
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    d = depth(plan_lines[i])
+    for ln in reversed(plan_lines[:i]):
+        if depth(ln) < d:
+            d = depth(ln)
+            yield ln
+
+
+def test_cc_round_plan(spark):
+    """One connected-components round: five hash exchanges (labels by
+    parent and by node for the grandparent self-join, the grandparents
+    by node for the edges join, the neighbourhood min by node, the new
+    labels by node), no cartesian product, and no exchange between the
+    checkpointed edges scan and its join: sym is partitioned by b once,
+    before its checkpoint, so the edges side never shuffles inside the
+    round loop."""
+    from sparkdedup.operators import components as cc
+
+    n = 64
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n)],
+                                  "src long, dst long")
+    sym, labels = cc.initial_state(edges)
+    plan = cc.hook_round(sym, labels)._jdf.queryExecution() \
+        .executedPlan().toString()
+    lines = plan.splitlines()
+    assert sum("Exchange hashpartitioning" in ln for ln in lines) == 5
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    sym_scans = [i for i, ln in enumerate(lines)
+                 if "Scan ExistingRDD[a#" in ln]
+    assert len(sym_scans) == 1
+    for ln in _ancestors(lines, sym_scans[0]):
+        if "Join" in ln:
+            break
+        assert "Exchange" not in ln, plan
+    cc.release_local_checkpoint(labels)
+    cc.release_local_checkpoint(sym)
