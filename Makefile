@@ -1,7 +1,7 @@
 .PHONY: test bench dist scaling clean
 
 test:
-	python -m pytest tests/ -x -q
+	python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

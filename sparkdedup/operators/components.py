@@ -126,19 +126,14 @@ def seed_labels(sym: DataFrame) -> DataFrame:
             .withColumnRenamed("b", "file_id"))
 
 
-def initial_state(edges: DataFrame, checkpoint: bool = True):
-    """(sym, seed labels), both lazily checkpointed if `checkpoint`."""
-    sym = symmetric_edges(edges)
-    if checkpoint:
-        # eager=False everywhere in this operator: the next action that
-        # touches the frame materializes the checkpoint as part of its own
-        # job, so each round costs ONE blocking job (the convergence sum)
-        # instead of two (checkpoint job + sum job)
-        sym = _checkpoint_keeping_partitioning(sym)
-    labels = seed_labels(sym)
-    if checkpoint:
-        labels = labels.localCheckpoint(eager=False)
-    return sym, labels
+def initial_state(edges: DataFrame):
+    """(sym, seed labels), both lazily checkpointed."""
+    # eager=False everywhere in this operator: the next action that
+    # touches the frame materializes the checkpoint as part of its own
+    # job, so each round costs ONE blocking job (the convergence sum)
+    # instead of two (checkpoint job + sum job)
+    sym = _checkpoint_keeping_partitioning(symmetric_edges(edges))
+    return sym, seed_labels(sym).localCheckpoint(eager=False)
 
 
 def hook_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
@@ -182,7 +177,6 @@ def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
     cfg: DedupConfig,
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, CCRounds]:
     """edges(src, dst) + nodes(file_id) -> clusters(file_id, cluster_id).
 
@@ -190,7 +184,7 @@ def connected_components(
     (clusters_df, rounds); check rounds.converged: after max_cc_iters
     rounds without a fixpoint the clusters are not the components.
     """
-    sym, labels = initial_state(edges, checkpoint)
+    sym, labels = initial_state(edges)
     # computing the initial sum NOW also materializes the labels (and sym)
     # checkpoints in the same job
     prev_sum = _label_sum(labels)
@@ -199,9 +193,7 @@ def connected_components(
     converged = False
     for _ in range(cfg.max_cc_iters):
         t0 = time.perf_counter()
-        new = hook_round(sym, labels)
-        if checkpoint:
-            new = new.localCheckpoint(eager=False)
+        new = hook_round(sym, labels).localCheckpoint(eager=False)
         # convergence: labels never increase, so the label-sum strictly
         # decreases until the fixpoint — one narrow aggregate per round
         # instead of a self-join compare; this action also materializes
@@ -211,17 +203,14 @@ def connected_components(
         # the sum above materialized this round's checkpoint, so the
         # previous round's blocks are unreachable by any future plan —
         # release them instead of letting them pile up for the session
-        if checkpoint:
-            release_local_checkpoint(labels)
+        release_local_checkpoint(labels)
         labels = new
         if new_sum == prev_sum:
             converged = True
             break
         prev_sum = new_sum
-    out = _with_singletons(nodes, labels), CCRounds(seconds, converged)
-    if checkpoint:
-        release_local_checkpoint(sym)
-    return out
+    release_local_checkpoint(sym)
+    return _with_singletons(nodes, labels), CCRounds(seconds, converged)
 
 
 def cluster_representatives(

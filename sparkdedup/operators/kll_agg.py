@@ -14,9 +14,9 @@ alternating items with doubled weight (deterministic alternating offset —
 same trade as req_agg), and leaves an odd leftover in place, so TOTAL
 WEIGHT == n exactly at all times; min/max are tracked exactly.
 
-Spark-first two-phase (same shape as tdigest_agg / req_agg): phase 1
-accumulates each partition's Arrow batch iterator into per-group chains
-(O(k log n) state); phase 2 merges per group by replaying retained
+Spark-first two-phase (operators/quantile_sketch.py, shared with req_agg
+and tdigest_agg): phase 1 accumulates each partition's Arrow batch
+iterator into per-group chains (O(k log n) state); phase 2 merges per group by replaying retained
 (value, 2^level) items into a fresh chain — the standard KLL merge, and
 also the bridge for REFERENCE sketches: a decoded .sk image's
 (items, weights) feed the same path (tests/test_kll_agg.py).
@@ -25,188 +25,38 @@ also the bridge for REFERENCE sketches: a decoded .sk image's
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
-                               StructType)
+from pyspark.sql.types import DoubleType, StructField
+
+from sparkdedup.operators.quantile_sketch import (CompactorChain, chain_agg,
+                                                  chain_items, read_quantiles,
+                                                  read_rows, weighted_quantile)
 
 
-class _KllChain:
-    """KLL compactor chain over float64 values."""
+class _KllChain(CompactorChain):
+    """KLL compactor chain: level capacities shrink geometrically with
+    depth, and a compaction keeps the odd leftover of a level in place."""
 
     def __init__(self, k: int = 200, c: float = 2.0 / 3.0, m: int = 8):
         if k < m:
             raise ValueError("k must be >= m")
+        super().__init__()
         self.k, self.c, self.m = k, c, m
-        self.levels: list[list[float]] = [[]]
-        self.coins = 0
 
     def _cap(self, lvl: int) -> int:
         h = len(self.levels)
         return max(int(np.ceil(self.k * self.c ** (h - 1 - lvl))), self.m)
 
-    def update(self, values: np.ndarray) -> None:
-        self.levels[0].extend(values.tolist())
-        self._compress()
-
-    def add_weighted(self, values: np.ndarray, level: int) -> None:
-        while len(self.levels) <= level:
-            self.levels.append([])
-        self.levels[level].extend(values.tolist())
-        self._compress()
-
-    def _compress(self) -> None:
-        lvl = 0
-        while lvl < len(self.levels):
-            buf = self.levels[lvl]
-            if len(buf) > self._cap(lvl):
-                arr = np.sort(np.asarray(buf, dtype=np.float64))
-                even = len(arr) & ~1  # largest even prefix count
-                offset = self.coins & 1
-                self.coins += 1
-                promoted = arr[offset:even:2]
-                leftover = arr[even:]
-                if lvl + 1 >= len(self.levels):
-                    self.levels.append([])
-                self.levels[lvl + 1].extend(promoted.tolist())
-                self.levels[lvl] = leftover.tolist()
-            lvl += 1
-
-    def items(self) -> tuple[np.ndarray, np.ndarray]:
-        vals, wts = [], []
-        for lvl, buf in enumerate(self.levels):
-            if buf:
-                vals.append(np.asarray(buf, dtype=np.float64))
-                wts.append(np.full(len(buf), 1 << lvl, dtype=np.int64))
-        if not vals:
-            return np.empty(0), np.empty(0, np.int64)
-        return np.concatenate(vals), np.concatenate(wts)
-
-    def total_weight(self) -> int:
-        return sum(len(b) * (1 << l) for l, b in enumerate(self.levels))
-
-    def num_retained(self) -> int:
-        return sum(len(b) for b in self.levels)
-
-
-def kll_quantile(values: np.ndarray, weights: np.ndarray,
-                 qs: np.ndarray) -> np.ndarray:
-    """Weighted quantile: smallest retained value whose cumulative weight
-    reaches q*N (reference sorted-view semantics)."""
-    order = np.argsort(values, kind="stable")
-    v, w = values[order], weights[order].astype(np.float64)
-    cum = np.cumsum(w)
-    targets = np.asarray(qs, dtype=np.float64) * cum[-1]
-    idx = np.minimum(np.searchsorted(cum, targets, side="left"), len(v) - 1)
-    return v[idx]
-
-
-def _sketch_schema(base_fields: list[StructField]) -> StructType:
-    return StructType(base_fields + [
-        StructField("levels", ArrayType(LongType())),
-        StructField("values", ArrayType(DoubleType())),
-        StructField("n", DoubleType()),
-        StructField("min_item", DoubleType()),
-        StructField("max_item", DoubleType()),
-    ])
+    def _split(self, arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        even = len(arr) & ~1  # largest even prefix count
+        return arr[even:], arr[:even]
 
 
 def kll_agg(df: DataFrame, value_col: str,
             group_cols: list[str] | None = None, k: int = 200) -> DataFrame:
     """Aggregate `value_col` into one KLL sketch per group. Output:
     group cols + (levels, values, n EXACT, min_item, max_item exact)."""
-    gcols = list(group_cols or [])
-    fields = [f for f in df.schema.fields if f.name in gcols]
-    mid = _sketch_schema(fields)
-
-    def _partial(batches):
-        FLUSH_AT = 2_000_000
-        vbufs: list[np.ndarray] = []
-        gbufs: list[np.ndarray] = []
-        chains: dict[tuple, _KllChain] = {}
-        stats: dict[tuple, list] = {}
-
-        def fold():
-            if not vbufs:
-                return
-            v = np.concatenate(vbufs)
-            vbufs.clear()
-            if gcols:
-                g = np.concatenate(gbufs)
-                gbufs.clear()
-                codes, uniq = pd.factorize(g)
-                order = np.argsort(codes, kind="stable")
-                bounds = np.flatnonzero(
-                    np.r_[True, codes[order][1:] != codes[order][:-1]])
-                segs = np.split(order, bounds[1:])
-                keys = [(uniq[codes[s[0]]],) for s in segs]
-            else:
-                segs, keys = [np.arange(len(v))], [()]
-            for key, seg in zip(keys, segs):
-                vv = v[seg]
-                vv = vv[~np.isnan(vv)]
-                if not len(vv):
-                    continue
-                ch = chains.get(key)
-                if ch is None:
-                    ch = chains[key] = _KllChain(k)
-                    stats[key] = [0.0, np.inf, -np.inf]
-                ch.update(vv)
-                st = stats[key]
-                st[0] += len(vv)
-                st[1] = min(st[1], float(vv.min()))
-                st[2] = max(st[2], float(vv.max()))
-
-        buffered = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vbufs.append(pdf[value_col].to_numpy(dtype=np.float64))
-            if gcols:
-                gbufs.append(pdf[gcols[0]].to_numpy() if len(gcols) == 1
-                             else pd.MultiIndex.from_frame(
-                                 pdf[gcols]).to_numpy())
-            buffered += len(pdf)
-            if buffered >= FLUSH_AT:
-                fold()
-                buffered = 0
-        fold()
-        if chains:
-            rows = []
-            for key, ch in chains.items():
-                vals, wts = ch.items()
-                n, mn, mx = stats[key]
-                row = {}
-                for i, c in enumerate(gcols):
-                    row[c] = key[i] if len(gcols) == 1 else key[0][i]
-                row.update({"levels": np.log2(wts).astype(np.int64),
-                            "values": vals, "n": n,
-                            "min_item": mn, "max_item": mx})
-                rows.append(row)
-            yield pd.DataFrame(rows)
-
-    partial = df.select(*(gcols + [value_col])).mapInPandas(_partial, mid)
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        ch = _KllChain(k)
-        for _, r in pdf.iterrows():
-            lv = np.asarray(r["levels"], dtype=np.int64)
-            va = np.asarray(r["values"], dtype=np.float64)
-            for lvl in np.unique(lv):
-                ch.add_weighted(va[lv == lvl], int(lvl))
-        vals, wts = ch.items()
-        out = {c: [pdf[c].iloc[0]] for c in gcols}
-        out.update({"levels": [np.log2(wts).astype(np.int64)],
-                    "values": [vals], "n": [float(pdf["n"].sum())],
-                    "min_item": [float(pdf["min_item"].min())],
-                    "max_item": [float(pdf["max_item"].max())]})
-        return pd.DataFrame(out)
-
-    if gcols:
-        return partial.groupBy(*gcols).applyInPandas(_merge, mid)
-    return partial.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda key, pdf: _merge(pdf), mid)
+    return chain_agg(df, value_col, group_cols, lambda: _KllChain(k))
 
 
 def kll_rank_cdf_pmf(values: np.ndarray, weights: np.ndarray,
@@ -230,6 +80,20 @@ def kll_rank_cdf_pmf(values: np.ndarray, weights: np.ndarray,
     return cdf, pmf
 
 
+def _single_level_items(r, require_single_level: bool):
+    """chain_items of a row; with require_single_level, raise if the
+    merged chain compacted (any item above level 0)."""
+    lv = np.asarray(r["levels"], dtype=np.int64)
+    if require_single_level and (lv != 0).any():
+        raise RuntimeError(
+            "KLL exact-regime contract violated: merged chain "
+            f"has items at levels {sorted(set(lv[lv != 0]))} "
+            "(it compacted). Size k >= the largest group's "
+            "count, or drop require_single_level to accept "
+            "the probabilistic envelope.")
+    return chain_items(r)
+
+
 def kll_agg_cdf(sketches: DataFrame, split_points: list[float],
                 group_cols: list[str] | None = None,
                 round_to: int = 6,
@@ -238,29 +102,17 @@ def kll_agg_cdf(sketches: DataFrame, split_points: list[float],
     over kll_agg output, same exact-regime guard semantics as
     kll_agg_quantiles (require_single_level raises on a compacted chain
     instead of silently emitting estimates)."""
-    gcols = list(group_cols or [])
-    fields = [f for f in sketches.schema.fields if f.name in gcols]
-    schema = StructType(fields + [StructField("x", DoubleType()),
-                                  StructField("cdf", DoubleType()),
-                                  StructField("pmf", DoubleType())])
     xs = np.asarray(sorted(split_points), dtype=np.float64)
 
-    def run(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                lv = np.asarray(r["levels"], dtype=np.int64)
-                if require_single_level and (lv != 0).any():
-                    raise RuntimeError(
-                        "KLL exact-regime contract violated: chain "
-                        "compacted; see kll_agg_quantiles.")
-                cdf, pmf = kll_rank_cdf_pmf(
-                    np.asarray(r["values"]), np.int64(1) << lv, xs)
-                out = {c: np.repeat(r[c], len(xs)) for c in gcols}
-                out.update({"x": xs, "cdf": np.round(cdf, round_to),
-                            "pmf": np.round(pmf, round_to)})
-                yield pd.DataFrame(out)
+    def read(r):
+        cdf, pmf = kll_rank_cdf_pmf(
+            *_single_level_items(r, require_single_level), xs)
+        return {"x": xs, "cdf": np.round(cdf, round_to),
+                "pmf": np.round(pmf, round_to)}
 
-    return sketches.mapInPandas(run, schema)
+    return read_rows(sketches, group_cols,
+                     [StructField(c, DoubleType())
+                      for c in ("x", "cdf", "pmf")], read)
 
 
 def kll_agg_quantiles(sketches: DataFrame, qs: list[float],
@@ -275,27 +127,7 @@ def kll_agg_quantiles(sketches: DataFrame, qs: list[float],
     not silently approximate values — if any merged chain holds items
     above level 0. The check is per-row inside the kernel, so it runs
     distributed and costs nothing beyond the read it already does."""
-    gcols = list(group_cols or [])
-    fields = [f for f in sketches.schema.fields if f.name in gcols]
-    schema = StructType(fields + [StructField("q", DoubleType()),
-                                  StructField("value", DoubleType())])
-    qarr = np.asarray(qs, dtype=np.float64)
-
-    def run(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                lv = np.asarray(r["levels"], dtype=np.int64)
-                if require_single_level and (lv != 0).any():
-                    raise RuntimeError(
-                        "KLL exact-regime contract violated: merged chain "
-                        f"has items at levels {sorted(set(lv[lv != 0]))} "
-                        "(it compacted). Size k >= the largest group's "
-                        "count, or drop require_single_level to accept "
-                        "the probabilistic envelope.")
-                wts = np.int64(1) << lv
-                vals = kll_quantile(np.asarray(r["values"]), wts, qarr)
-                out = {c: np.repeat(r[c], len(qarr)) for c in gcols}
-                out.update({"q": qarr, "value": np.round(vals, round_to)})
-                yield pd.DataFrame(out)
-
-    return sketches.mapInPandas(run, schema)
+    return read_quantiles(
+        sketches, qs, group_cols, round_to,
+        lambda r, qarr: weighted_quantile(
+            *_single_level_items(r, require_single_level), qarr))

@@ -21,9 +21,10 @@ even-size section of 2m items at weight 2^l with m items at weight
 tracked exactly. Quantile accuracy is the probabilistic part
 (tests/test_req_agg.py pins the relative-tail envelope empirically).
 
-Spark-first two-phase (same shape as tdigest_agg / varopt_sample_scaled):
-  phase 1 — mapInPandas: each (batch, group) slice builds a compactor
-    chain; state O(k * log(n/k)) per slice.
+Spark-first two-phase (operators/quantile_sketch.py, shared with kll_agg
+and tdigest_agg):
+  phase 1 — mapInPandas: each partition builds a compactor chain per
+    group; state O(k * log(n/k)) per chain.
   phase 2 — applyInPandas per group: merge = concatenate per-level
     buffers, re-compact overfull levels (the published merge), preserving
     total weight exactly.
@@ -37,15 +38,16 @@ via its deterministic-testing mode).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
-                               StructType)
+
+from sparkdedup.operators.quantile_sketch import (CompactorChain, chain_agg,
+                                                  chain_items, read_quantiles,
+                                                  weighted_quantile)
 
 
-class _ReqChain:
-    """Compactor chain over float64 values.
+class _ReqChain(CompactorChain):
+    """REQ compactor chain: every level holds 2k items, and a compaction
+    protects `k` items at one end of the sorted level.
 
     hra=True (default) protects the HIGH end of every level buffer —
     relative rank error at rank r scales with the tail mass n - r.
@@ -58,94 +60,24 @@ class _ReqChain:
     def __init__(self, k: int, hra: bool = True):
         if k < 4 or k % 2:
             raise ValueError("k must be even and >= 4")
+        super().__init__()
         self.k = k
         self.hra = hra
-        self.levels: list[list[float]] = [[]]
-        self.coins = 0  # compaction counter -> deterministic coin
-        self.n = 0.0
 
-    def _capacity(self, lvl: int) -> int:
+    def _cap(self, lvl: int) -> int:
         # higher levels may shrink in the paper; fixed 2k keeps the
         # analysis envelope and simplifies merge
         return 2 * self.k
 
-    def update(self, values: np.ndarray) -> None:
-        self.levels[0].extend(values.tolist())
-        self.n += len(values)
-        self._compress()
-
-    def add_weighted(self, values: np.ndarray, level: int) -> None:
-        while len(self.levels) <= level:
-            self.levels.append([])
-        self.levels[level].extend(values.tolist())
-        self.n += float(len(values)) * (1 << level)
-        self._compress()
-
-    def _compress(self) -> None:
-        lvl = 0
-        while lvl < len(self.levels):
-            buf = self.levels[lvl]
-            cap = self._capacity(lvl)
-            if len(buf) > cap:
-                arr = np.sort(np.asarray(buf, dtype=np.float64))
-                # protect one end of the sorted buffer; compact the other
-                # (HRA: keep top / compact low; LRA: keep bottom /
-                # compact high). The compacted section must stay even so
-                # total weight is exact in both modes.
-                protect = self.k
-                sec = (arr[:len(arr) - protect] if self.hra
-                       else arr[protect:])
-                if len(sec) % 2:
-                    protect += 1
-                    sec = (arr[:len(arr) - protect] if self.hra
-                           else arr[protect:])
-                keep = (arr[len(arr) - protect:] if self.hra
-                        else arr[:protect])
-                offset = self.coins & 1
-                self.coins += 1
-                promoted = sec[offset::2]
-                if lvl + 1 >= len(self.levels):
-                    self.levels.append([])
-                self.levels[lvl + 1].extend(promoted.tolist())
-                self.levels[lvl] = keep.tolist()
-            lvl += 1
-
-    def items(self) -> tuple[np.ndarray, np.ndarray]:
-        vals, wts = [], []
-        for lvl, buf in enumerate(self.levels):
-            if buf:
-                vals.append(np.asarray(buf, dtype=np.float64))
-                wts.append(np.full(len(buf), 1 << lvl, dtype=np.int64))
-        if not vals:
-            return np.empty(0), np.empty(0, np.int64)
-        return np.concatenate(vals), np.concatenate(wts)
-
-    def total_weight(self) -> int:
-        return sum(len(b) * (1 << l) for l, b in enumerate(self.levels))
-
-
-def req_quantile(values: np.ndarray, weights: np.ndarray,
-                 qs: np.ndarray) -> np.ndarray:
-    """Weighted quantile from retained items: smallest retained value
-    whose cumulative weight reaches q*N (the sketch's rank estimator)."""
-    order = np.argsort(values, kind="stable")
-    v, w = values[order], weights[order].astype(np.float64)
-    cum = np.cumsum(w)
-    total = cum[-1]
-    targets = np.asarray(qs, dtype=np.float64) * total
-    idx = np.minimum(np.searchsorted(cum, targets, side="left"),
-                     len(v) - 1)
-    return v[idx]
-
-
-def _sketch_schema(base_fields: list[StructField]) -> StructType:
-    return StructType(base_fields + [
-        StructField("levels", ArrayType(LongType())),
-        StructField("values", ArrayType(DoubleType())),
-        StructField("n", DoubleType()),
-        StructField("min_item", DoubleType()),
-        StructField("max_item", DoubleType()),
-    ])
+    def _split(self, arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        # protect one end of the sorted buffer; compact the other (HRA:
+        # keep top / compact low; LRA: keep bottom / compact high). The
+        # compacted section must stay even so total weight is exact in
+        # both modes.
+        protect = self.k + (len(arr) - self.k) % 2
+        if self.hra:
+            return arr[len(arr) - protect:], arr[:len(arr) - protect]
+        return arr[:protect], arr[protect:]
 
 
 def req_agg(df: DataFrame, value_col: str,
@@ -157,124 +89,13 @@ def req_agg(df: DataFrame, value_col: str,
 
     Output: group cols + (levels array<long> — per retained item,
     values array<double>, n double EXACT, min_item, max_item exact)."""
-    gcols = list(group_cols or [])
-    fields = [f for f in df.schema.fields if f.name in gcols]
-    mid = _sketch_schema(fields)
-
-    def _partial(batches):
-        # Accumulate across the whole partition's batch iterator (the
-        # session pins Arrow batches small for the document kernels —
-        # per-batch python work here would run thousands of times per
-        # partition); one factorize + per-group chain build at the end.
-        # Memory bounded by FLUSH_AT: past it, buffered values fold into
-        # the per-group chains (O(k log n) state) and are dropped.
-        FLUSH_AT = 2_000_000
-        vbufs: list[np.ndarray] = []
-        gbufs: list[np.ndarray] = []
-        chains: dict[tuple, _ReqChain] = {}
-        stats: dict[tuple, list] = {}  # key -> [n, mn, mx]
-
-        def fold():
-            if not vbufs:
-                return
-            v = np.concatenate(vbufs)
-            vbufs.clear()
-            if gcols:
-                g = np.concatenate(gbufs)
-                gbufs.clear()
-                codes, uniq = pd.factorize(g)
-                order = np.argsort(codes, kind="stable")
-                bounds = np.flatnonzero(
-                    np.r_[True, codes[order][1:] != codes[order][:-1]])
-                segs = np.split(order, bounds[1:])
-                keys = [(uniq[codes[s[0]]],) for s in segs]
-            else:
-                segs, keys = [np.arange(len(v))], [()]
-            for key, seg in zip(keys, segs):
-                vv = v[seg]
-                vv = vv[~np.isnan(vv)]
-                if not len(vv):
-                    continue
-                ch = chains.get(key)
-                if ch is None:
-                    ch = chains[key] = _ReqChain(k, hra)
-                    stats[key] = [0.0, np.inf, -np.inf]
-                ch.update(vv)
-                st = stats[key]
-                st[0] += len(vv)
-                st[1] = min(st[1], float(vv.min()))
-                st[2] = max(st[2], float(vv.max()))
-
-        buffered = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vbufs.append(pdf[value_col].to_numpy(dtype=np.float64))
-            if gcols:
-                gbufs.append(pdf[gcols[0]].to_numpy() if len(gcols) == 1
-                             else pd.MultiIndex.from_frame(
-                                 pdf[gcols]).to_numpy())
-            buffered += len(pdf)
-            if buffered >= FLUSH_AT:
-                fold()
-                buffered = 0
-        fold()
-        if chains:
-            rows = []
-            for key, ch in chains.items():
-                vals, wts = ch.items()
-                n, mn, mx = stats[key]
-                row = {}
-                for i, c in enumerate(gcols):
-                    row[c] = key[i] if len(gcols) == 1 else key[0][i]
-                row.update({"levels": np.log2(wts).astype(np.int64),
-                            "values": vals, "n": n,
-                            "min_item": mn, "max_item": mx})
-                rows.append(row)
-            yield pd.DataFrame(rows)
-
-    partial = df.select(*(gcols + [value_col])).mapInPandas(_partial, mid)
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        ch = _ReqChain(k, hra)
-        for _, r in pdf.iterrows():
-            lv = np.asarray(r["levels"], dtype=np.int64)
-            va = np.asarray(r["values"], dtype=np.float64)
-            for lvl in np.unique(lv):
-                ch.add_weighted(va[lv == lvl], int(lvl))
-        vals, wts = ch.items()
-        out = {c: [pdf[c].iloc[0]] for c in gcols}
-        out.update({
-            "levels": [np.log2(wts).astype(np.int64)],
-            "values": [vals], "n": [float(pdf["n"].sum())],
-            "min_item": [float(pdf["min_item"].min())],
-            "max_item": [float(pdf["max_item"].max())]})
-        return pd.DataFrame(out)
-
-    if gcols:
-        return partial.groupBy(*gcols).applyInPandas(_merge, mid)
-    return partial.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda key, pdf: _merge(pdf), mid)
+    return chain_agg(df, value_col, group_cols, lambda: _ReqChain(k, hra))
 
 
 def req_agg_quantiles(sketches: DataFrame, qs: list[float],
                       group_cols: list[str] | None = None,
                       round_to: int = 4) -> DataFrame:
     """(group, q, value) — quantile estimates from req_agg output."""
-    gcols = list(group_cols or [])
-    fields = [f for f in sketches.schema.fields if f.name in gcols]
-    schema = StructType(fields + [StructField("q", DoubleType()),
-                                  StructField("value", DoubleType())])
-    qarr = np.asarray(qs, dtype=np.float64)
-
-    def run(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                wts = (np.int64(1) << np.asarray(r["levels"],
-                                                 dtype=np.int64))
-                vals = req_quantile(np.asarray(r["values"]), wts, qarr)
-                out = {c: np.repeat(r[c], len(qarr)) for c in gcols}
-                out.update({"q": qarr, "value": np.round(vals, round_to)})
-                yield pd.DataFrame(out)
-
-    return sketches.mapInPandas(run, schema)
+    return read_quantiles(
+        sketches, qs, group_cols, round_to,
+        lambda r, qarr: weighted_quantile(*chain_items(r), qarr))

@@ -9,10 +9,11 @@ arXiv:1902.04023): clusters kept small near the tails via the k1 (arcsine)
 scale function, merged greedily in mean order under the scale-function
 weight budget.
 
-Spark-first two-phase shape (same pattern as varopt_sample_scaled):
-  phase 1 — mapInPandas: each (Arrow batch, group) slice compresses its
-    raw values into <= ~2*delta centroids. Bounded state, no shuffle,
-    map-side reduction of n rows -> O(delta) rows per slice.
+Spark-first two-phase shape (operators/quantile_sketch.py, shared with
+kll_agg and req_agg):
+  phase 1 — mapInPandas: each partition compresses a group's raw values
+    into <= ~2*delta centroids. Bounded state, no shuffle, map-side
+    reduction of n rows -> O(delta) rows per partition and group.
   phase 2 — applyInPandas per group: concatenate the slices' centroids
     (already (mean, weight) pairs — t-digest merge treats weighted
     centroids exactly like weighted points) and compress once more.
@@ -24,19 +25,14 @@ bound as a single-pass digest at the same delta.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, StructField,
-                               StructType)
+from pyspark.sql.types import ArrayType, DoubleType, StructField
+
+from sparkdedup.operators.quantile_sketch import read_quantiles, two_phase_agg
 
 
 def _k1(q: np.ndarray | float, delta: float) -> np.ndarray | float:
     return delta / (2.0 * np.pi) * np.arcsin(2.0 * np.asarray(q) - 1.0)
-
-
-def _k1_inv(k: np.ndarray | float, delta: float) -> np.ndarray | float:
-    return (np.sin(np.asarray(k) * (2.0 * np.pi) / delta) + 1.0) / 2.0
 
 
 def td_compress(means: np.ndarray, weights: np.ndarray,
@@ -89,16 +85,6 @@ def td_quantile(means: np.ndarray, weights: np.ndarray, mn: float,
     return np.interp(np.asarray(qs, dtype=np.float64) * total, xs, ys)
 
 
-def _digest_schema(base_fields: list[StructField]) -> StructType:
-    return StructType(base_fields + [
-        StructField("means", ArrayType(DoubleType())),
-        StructField("weights", ArrayType(DoubleType())),
-        StructField("n", DoubleType()),
-        StructField("min_item", DoubleType()),
-        StructField("max_item", DoubleType()),
-    ])
-
-
 def tdigest_agg(df: DataFrame, value_col: str,
                 group_cols: list[str] | None = None,
                 delta: float = 100.0) -> DataFrame:
@@ -107,119 +93,33 @@ def tdigest_agg(df: DataFrame, value_col: str,
     Output: group cols + (means array<double>, weights array<double>,
     n double, min_item, max_item). n is EXACT (sum of weights is
     preserved by every merge); quantiles via tdigest_quantiles."""
-    gcols = list(group_cols or [])
-    spark_fields = [f for f in df.schema.fields if f.name in gcols]
+    def update(st, values):
+        m, w = td_compress(values, np.ones(len(values)), delta)
+        if st is None:
+            return m, w
+        return td_compress(np.concatenate([st[0], m]),
+                           np.concatenate([st[1], w]), delta)
 
-    mid = _digest_schema(spark_fields)
+    def to_row(st):
+        return {"means": st[0], "weights": st[1]}
 
-    def _partial(batches):
-        # Accumulate across the WHOLE partition's batch iterator before
-        # compressing: the session pins Arrow batches small for the fat
-        # document kernels (NOTES gotcha #2), so per-batch python work
-        # here would run thousands of times per partition. Appending raw
-        # arrays is O(1) per batch; one factorize + segmented compress at
-        # the end does all the real work. Memory is bounded by FLUSH_AT:
-        # past it the buffer is folded into centroid state and dropped.
-        FLUSH_AT = 2_000_000
-        vbufs: list[np.ndarray] = []
-        gbufs: list[np.ndarray] = []
-        state: dict[tuple, list] = {}  # key -> [means, weights, n, mn, mx]
-
-        def fold():
-            if not vbufs:
-                return
-            v = np.concatenate(vbufs)
-            vbufs.clear()
-            if gcols:
-                g = np.concatenate(gbufs)
-                gbufs.clear()
-                codes, uniq = pd.factorize(g)
-                order = np.argsort(codes, kind="stable")
-                bounds = np.flatnonzero(
-                    np.r_[True, codes[order][1:] != codes[order][:-1]])
-                segs = np.split(order, bounds[1:])
-                keys = [(uniq[codes[s[0]]],) for s in segs]
-            else:
-                segs, keys = [np.arange(len(v))], [()]
-            for key, seg in zip(keys, segs):
-                vv = v[seg]
-                vv = vv[~np.isnan(vv)]
-                if not len(vv):
-                    continue
-                m, w = td_compress(vv, np.ones(len(vv)), delta)
-                st = state.get(key)
-                if st is None:
-                    state[key] = [m, w, float(len(vv)),
-                                  float(vv.min()), float(vv.max())]
-                else:
-                    mm, ww = td_compress(np.concatenate([st[0], m]),
-                                         np.concatenate([st[1], w]), delta)
-                    state[key] = [mm, ww, st[2] + len(vv),
-                                  min(st[3], float(vv.min())),
-                                  max(st[4], float(vv.max()))]
-
-        buffered = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vbufs.append(pdf[value_col].to_numpy(dtype=np.float64))
-            if gcols:
-                gbufs.append(pdf[gcols[0]].to_numpy() if len(gcols) == 1
-                             else pd.MultiIndex.from_frame(
-                                 pdf[gcols]).to_numpy())
-            buffered += len(pdf)
-            if buffered >= FLUSH_AT:
-                fold()
-                buffered = 0
-        fold()
-        if state:
-            rows = []
-            for key, (m, w, n, mn, mx) in state.items():
-                row = {}
-                for i, c in enumerate(gcols):
-                    row[c] = key[i] if len(gcols) == 1 else key[0][i]
-                row.update({"means": m, "weights": w, "n": n,
-                            "min_item": mn, "max_item": mx})
-                rows.append(row)
-            yield pd.DataFrame(rows)
-
-    partial = df.select(*(gcols + [value_col])).mapInPandas(_partial, mid)
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(pdf):
         m = np.concatenate([np.asarray(x) for x in pdf["means"]])
         w = np.concatenate([np.asarray(x) for x in pdf["weights"]])
-        mm, ww = td_compress(m, w, delta)
-        out = {c: [pdf[c].iloc[0]] for c in gcols}
-        out.update({"means": [mm], "weights": [ww],
-                    "n": [float(pdf["n"].sum())],
-                    "min_item": [float(pdf["min_item"].min())],
-                    "max_item": [float(pdf["max_item"].max())]})
-        return pd.DataFrame(out)
+        return to_row(td_compress(m, w, delta))
 
-    if gcols:
-        return partial.groupBy(*gcols).applyInPandas(_merge, mid)
-    return partial.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda key, pdf: _merge(pdf), mid)
+    fields = [StructField("means", ArrayType(DoubleType())),
+              StructField("weights", ArrayType(DoubleType()))]
+    return two_phase_agg(df, value_col, group_cols, fields, update, to_row,
+                         merge)
 
 
 def tdigest_quantiles(digests: DataFrame, qs: list[float],
                       group_cols: list[str] | None = None,
                       round_to: int = 4) -> DataFrame:
     """(group, q, value) — quantile estimates from tdigest_agg output."""
-    gcols = list(group_cols or [])
-    fields = [f for f in digests.schema.fields if f.name in gcols]
-    schema = StructType(fields + [StructField("q", DoubleType()),
-                                  StructField("value", DoubleType())])
-    qarr = np.asarray(qs, dtype=np.float64)
-
-    def run(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                vals = td_quantile(np.asarray(r["means"]),
-                                   np.asarray(r["weights"]),
-                                   r["min_item"], r["max_item"], qarr)
-                out = {c: np.repeat(r[c], len(qarr)) for c in gcols}
-                out.update({"q": qarr, "value": np.round(vals, round_to)})
-                yield pd.DataFrame(out)
-
-    return digests.mapInPandas(run, schema)
+    return read_quantiles(
+        digests, qs, group_cols, round_to,
+        lambda r, qarr: td_quantile(np.asarray(r["means"]),
+                                    np.asarray(r["weights"]),
+                                    r["min_item"], r["max_item"], qarr))

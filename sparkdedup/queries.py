@@ -168,11 +168,8 @@ def q_dedup_clusters_docs(spark, sf_dir):
     edges = (docs.join(reps, "h")
              .filter(F.col("file_id") != F.col("rep"))
              .select(F.col("rep").alias("src"), F.col("file_id").alias("dst")))
-    # checkpoint=True: each CC round localCheckpoints, otherwise iteration
-    # i's plan re-executes iterations 1..i-1 (lineage grows quadratically —
-    # measured 9.6s -> 2.4s at sf0.1)
     clusters, _ = connected_components(
-        edges, docs.select("file_id"), DedupConfig(), checkpoint=True)
+        edges, docs.select("file_id"), DedupConfig())
     return clusters.select(F.col("file_id").alias("doc_id"),
                            F.col("cluster_id"))
 
@@ -494,34 +491,22 @@ WHERE a.doc_id <> b.doc_id
 """
 
 
-def q_minhash_lsh_docs(spark, sf_dir):
-    """LSH-accelerated near-dup pairs: MinHash-128 signatures -> 16x8
-    banding -> candidate pairs (the sub-quadratic pruner), then EXACT
-    word-3-gram Jaccard verification at tau=0.5 on candidates only.
-
-    The production pipeline (pipeline.py) verifies with the KMV-Jaccard
-    sketch estimate instead (no content re-join); here the final verify is
-    exact so the output is the true pair set — which makes it DuckDB
-    oracle-checkable while still exercising the full murmur3 signature +
-    LSH machinery (banding recall at tau=0.5 is asserted in
-    tests/test_pipeline_e2e.py)."""
-    from sparkdedup.config import DedupConfig
-    from sparkdedup.operators.lsh import candidate_pairs
-    from sparkdedup.operators.signatures import signature_stage
-
-    cfg = DedupConfig(jaccard_threshold=0.5)
+def _near_dup_doc_pairs(spark, sf_dir, candidates) -> DataFrame:
+    """(src, dst, jaccard) doc pairs with exact word-3-gram Jaccard >= 0.5
+    among the candidates that `candidates(files)` returns as (src, dst)
+    file-id pairs. `files` is the documents table in the pipeline's file
+    shape: repo 'docs', path = doc_id, commit '0', content = text."""
     docs = _read(spark, sf_dir, "documents")
     files = docs.select(
         F.lit("docs").alias("repo"),
         F.col("doc_id").cast("string").alias("path"),
         F.lit("0").alias("commit"),
         F.col("lang"), F.col("text").alias("content"))
-    sigs = signature_stage(_fan_out(files, spark), cfg)
+    cands = candidates(files)
     # remap murmur3 file_id -> doc_id for readable output; the map comes
-    # from the skinny _doc_idmap kernel, NOT sigs — deriving it from sigs
-    # re-ran the full signature kernel once per join branch
+    # from the skinny _doc_idmap kernel, NOT the signatures — deriving it
+    # from them re-ran the full signature kernel once per join branch
     idmap = _doc_idmap(docs)
-    cands = candidate_pairs(sigs, cfg)
     src_map = idmap.select(F.col("file_id").alias("src"),
                            F.col("orig_id").alias("src_doc"))
     dst_map = idmap.select(F.col("file_id").alias("dst"),
@@ -542,6 +527,26 @@ def q_minhash_lsh_docs(spark, sf_dir):
                 .unionByName(cand_docs.select(F.col("dst").alias("doc_id"))))
     inv = _word_gram_inv(spark, sf_dir, only_docs=cand_ids)
     return _exact_jaccard_on_pairs(cand_docs, inv, 0.5)
+
+
+def q_minhash_lsh_docs(spark, sf_dir):
+    """LSH-accelerated near-dup pairs: MinHash-128 signatures -> 16x8
+    banding -> candidate pairs (the sub-quadratic pruner), then EXACT
+    word-3-gram Jaccard verification at tau=0.5 on candidates only.
+
+    The production pipeline (pipeline.py) verifies with the KMV-Jaccard
+    sketch estimate instead (no content re-join); here the final verify is
+    exact so the output is the true pair set — which makes it DuckDB
+    oracle-checkable while still exercising the full murmur3 signature +
+    LSH machinery (banding recall at tau=0.5 is asserted in
+    tests/test_pipeline_e2e.py)."""
+    from sparkdedup.config import DedupConfig
+    from sparkdedup.operators.lsh import candidate_pairs
+    from sparkdedup.operators.signatures import signature_stage
+
+    cfg = DedupConfig(jaccard_threshold=0.5)
+    return _near_dup_doc_pairs(spark, sf_dir, lambda files: candidate_pairs(
+        signature_stage(_fan_out(files, spark), cfg), cfg))
 
 
 SQL_MINHASH_LSH_DOCS = """
@@ -583,47 +588,30 @@ def q_incremental_neardup_docs(spark, sf_dir):
 
     At 100 TB this is the shape of every ingest tick: corpus signatures
     come from the persisted signature checkpoint; only the delta is
-    shingled fresh. Here both sides run through signature_stage in one
-    scan (the split is a filter on the same signatures frame, so the
-    kernel runs once) — the plan's defining property, a broadcast band
-    join with no corpus-side shuffle, is guarded in test_plans.py."""
+    shingled fresh. Here the two sides run through signature_stage
+    separately, as at ingest — the plan's defining property, a broadcast
+    band join with no corpus-side shuffle, is guarded in test_plans.py."""
     from sparkdedup.config import DedupConfig
     from sparkdedup.operators.lsh import incremental_candidate_pairs
     from sparkdedup.operators.signatures import signature_stage
 
     cfg = DedupConfig(jaccard_threshold=0.5)
-    docs = _read(spark, sf_dir, "documents")
-    files = docs.select(
-        F.lit("docs").alias("repo"),
-        F.col("doc_id").cast("string").alias("path"),
-        F.lit("0").alias("commit"),
-        F.col("lang"), F.col("text").alias("content"))
-    is_delta = F.col("path").cast("long") % 7 == 0
-    # the two sides are shingled SEPARATELY — the real ingest shape: the
-    # corpus signature scan runs once (from the persisted checkpoint at
-    # cluster scale), and only the small delta is re-scanned for its
-    # broadcast band table (a filter-split of one shared signatures frame
-    # would re-run the full kernel over ALL docs once per consumer)
-    delta_sigs = signature_stage(_fan_out(files.filter(is_delta), spark),
-                                 cfg)
-    corpus_sigs = signature_stage(_fan_out(files.filter(~is_delta), spark),
-                                  cfg)
-    cands = incremental_candidate_pairs(corpus_sigs, delta_sigs)
-    idmap = _doc_idmap(docs)
-    src_map = idmap.select(F.col("file_id").alias("src"),
-                           F.col("orig_id").alias("src_doc"))
-    dst_map = idmap.select(F.col("file_id").alias("dst"),
-                           F.col("orig_id").alias("dst_doc"))
-    cand_docs = (
-        cands.join(src_map, "src").join(dst_map, "dst")
-        .select(F.least("src_doc", "dst_doc").alias("src"),
-                F.greatest("src_doc", "dst_doc").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=False))
-    cand_ids = (cand_docs.select(F.col("src").alias("doc_id"))
-                .unionByName(cand_docs.select(F.col("dst").alias("doc_id"))))
-    inv = _word_gram_inv(spark, sf_dir, only_docs=cand_ids)
-    return _exact_jaccard_on_pairs(cand_docs, inv, 0.5)
+
+    def candidates(files):
+        is_delta = F.col("path").cast("long") % 7 == 0
+        # the two sides are shingled SEPARATELY — the real ingest shape:
+        # the corpus signature scan runs once (from the persisted
+        # checkpoint at cluster scale), and only the small delta is
+        # re-scanned for its broadcast band table (a filter-split of one
+        # shared signatures frame would re-run the full kernel over ALL
+        # docs once per consumer)
+        delta_sigs = signature_stage(
+            _fan_out(files.filter(is_delta), spark), cfg)
+        corpus_sigs = signature_stage(
+            _fan_out(files.filter(~is_delta), spark), cfg)
+        return incremental_candidate_pairs(corpus_sigs, delta_sigs)
+
+    return _near_dup_doc_pairs(spark, sf_dir, candidates)
 
 
 SQL_INCREMENTAL_NEARDUP_DOCS = """
@@ -672,8 +660,7 @@ def q_neardup_clusters_docs(spark, sf_dir):
     pairs = q_minhash_lsh_docs(spark, sf_dir)  # (src, dst, jaccard) exact
     edges = pairs.select("src", "dst")
     nodes = docs.select(F.col("doc_id").alias("file_id"))
-    clusters, _ = connected_components(edges, nodes, DedupConfig(),
-                                       checkpoint=True)
+    clusters, _ = connected_components(edges, nodes, DedupConfig())
     return clusters.select(F.col("file_id").alias("doc_id"), "cluster_id")
 
 
@@ -2384,7 +2371,7 @@ def q_embedding_dedup_docs(spark, sf_dir):
     clusters, _ = connected_components(
         pairs.select("src", "dst"),
         emb.select(F.col("vec_id").alias("file_id")),
-        DedupConfig(), checkpoint=True)
+        DedupConfig())
     return clusters.select(F.col("file_id").alias("vec_id"), "cluster_id")
 
 

@@ -10,8 +10,8 @@ import re
 import numpy as np
 import pytest
 
-from sparkdedup.operators.kll_agg import (_KllChain, kll_agg,
-                                          kll_agg_quantiles, kll_quantile)
+from sparkdedup.operators.kll_agg import _KllChain, kll_agg, kll_agg_quantiles
+from sparkdedup.operators.quantile_sketch import weighted_quantile
 
 VEC_DIR = "/root/reference/serialization_test_data"
 SF_DIR = "/root/testdata/sf0.001"
@@ -44,7 +44,7 @@ def test_rank_error_envelope(q):
     s = np.sort(v)
     ch = _chain_over(v)
     vals, wts = ch.items()
-    est = kll_quantile(vals, wts, np.array([q]))[0]
+    est = weighted_quantile(vals, wts, np.array([q]))[0]
     est_rank = np.searchsorted(s, est, side="right") / n
     assert abs(est_rank - q) <= 0.03, (q, est_rank)
 
@@ -65,7 +65,7 @@ def test_merge_invariance():
     for q in (0.1, 0.5, 0.9, 0.99):
         for ch in (whole, merged):
             vals, wts = ch.items()
-            est = kll_quantile(vals, wts, np.array([q]))[0]
+            est = weighted_quantile(vals, wts, np.array([q]))[0]
             r = np.searchsorted(s, est, side="right") / len(s)
             assert abs(r - q) <= 0.04, (q, r)
 
@@ -93,7 +93,7 @@ def test_reference_sketches_merge_through_our_chain():
     assert ch.total_weight() == total
     vals, wts = ch.items()
     for q in (0.1, 0.5, 0.9):
-        est = kll_quantile(vals, wts, np.array([q]))[0]
+        est = weighted_quantile(vals, wts, np.array([q]))[0]
         assert abs(est - q * 10000) <= 0.05 * 10000, (q, est)
 
 

@@ -5,8 +5,8 @@ accuracy envelope, merge invariance, and the Spark two-phase operator."""
 import numpy as np
 import pytest
 
-from sparkdedup.operators.req_agg import (_ReqChain, req_agg,
-                                          req_agg_quantiles, req_quantile)
+from sparkdedup.operators.quantile_sketch import weighted_quantile
+from sparkdedup.operators.req_agg import _ReqChain, req_agg, req_agg_quantiles
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -46,7 +46,7 @@ def test_relative_tail_rank_error(q):
     s = np.sort(v)
     ch = _chain_over(v)
     vals, wts = ch.items()
-    est = req_quantile(vals, wts, np.array([q]))[0]
+    est = weighted_quantile(vals, wts, np.array([q]))[0]
     est_rank = np.searchsorted(s, est, side="right")
     target = q * n
     tail = n - target + 1
@@ -71,7 +71,7 @@ def test_merge_invariance_and_weight():
     for q in (0.99, 0.999):
         for ch in (whole, merged):
             vals, wts = ch.items()
-            est = req_quantile(vals, wts, np.array([q]))[0]
+            est = weighted_quantile(vals, wts, np.array([q]))[0]
             r = np.searchsorted(s, est, side="right")
             tail = len(s) - q * len(s) + 1
             assert abs(r - q * len(s)) <= 0.2 * tail + 2
@@ -162,7 +162,7 @@ def test_lra_relative_head_rank_error(q):
     s = np.sort(v)
     ch = _lra_chain_over(v)
     vals, wts = ch.items()
-    est = req_quantile(vals, wts, np.array([q]))[0]
+    est = weighted_quantile(vals, wts, np.array([q]))[0]
     est_rank = np.searchsorted(s, est, side="right")
     target = q * n
     head = target + 1
